@@ -74,7 +74,8 @@ def choose_with_stats(a: np.ndarray, st: stats.BlockStats) -> tuple[int, bytes]:
         )
     else:
         payload = codecs.encode(best_id, a)
-    assert len(payload) == best_size, (best_id, len(payload), best_size)
+    if len(payload) != best_size:
+        raise RuntimeError(f"codec {best_id}: {len(payload)} B, cost model {best_size}")
 
     # periodic analysis: only when repeats might exist that RLE/dict can't
     # see (cheap gates first — crumble's -Y work-skipping discipline).

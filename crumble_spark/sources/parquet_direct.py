@@ -87,11 +87,11 @@ def list_input_splits(in_path: str) -> list[tuple[str, int]]:
     its collect; both paths must return the bit-identical list or
     _task_partitions groups splits differently either side of the
     DISTRIBUTED_LISTING_MIN_FILES crossover (ADVICE r4)."""
-    out = []
-    for f in list_input_files(in_path):
-        for rg in range(pq.ParquetFile(f).metadata.num_row_groups):
-            out.append((f, rg))
-    return sorted(out)
+    return sorted(_footer_splits(list_input_files(in_path)))
+
+
+def _footer_splits(files) -> list[tuple[str, int]]:
+    return [(f, rg) for f in files for rg in range(pq.ParquetFile(f).num_row_groups)]
 
 
 # Serial-vs-distributed listing crossover (see list_input_splits_distributed).
@@ -112,25 +112,16 @@ def list_input_splits_distributed(
     between seconds and driver-serial hours."""
     files = list_input_files(in_path)
     if len(files) <= DISTRIBUTED_LISTING_MIN_FILES:
-        return sorted(
-            (f, rg)
-            for f in files
-            for rg in range(pq.ParquetFile(f).metadata.num_row_groups)
-        )
+        return sorted(_footer_splits(files))
 
     def read_footers(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         _pin_arrow_single_thread()
         for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                for rg in range(pq.ParquetFile(path).metadata.num_row_groups):
-                    rows.append((path, rg))
+            rows = _footer_splits(pdf["path"])
             if rows:
                 yield pd.DataFrame(rows, columns=["path", "rg"])
 
-    names = spark.createDataFrame([(f,) for f in files], "path string").repartition(
-        _task_partitions(spark, len(files))
-    )
+    names = _task_frame(spark, [(f,) for f in files], "path string")
     rows = names.mapInPandas(read_footers, schema="path string, rg int").collect()
     # deterministic order: the serial walk sorts by name then rg; the
     # distributed collect order is partition-arbitrary
@@ -142,14 +133,22 @@ def _split_name(path: str, rg: int) -> str:
 
 
 def _task_partitions(spark, n_splits: int) -> int:
-    """Batch input splits into tasks: one task per split pays a scheduler
-    launch + python-worker round trip per ~35 ms of work (measured 30%
-    of wall at bench scale).  Keep >=2 tasks per core for stealing, and
-    <=8 splits per task so a retry re-does a bounded amount of (fully
-    idempotent) work.  At 10^12-scale split counts the per-task batch
-    cap dominates; at bench scale the 2x-parallelism floor does."""
+    """Batch input splits into tasks: one task per slot, <=8 splits per task
+    so a retry re-does a bounded amount of (idempotent) work.  Not two per
+    slot: each Python task costs 0.15-0.23 s of worker CPU before user code
+    runs (4 cores, Python 3.11), in setup_spark_files -> invalidate_caches()
+    re-reading the pyspark.zip directory once per cached zipimporter."""
     par = spark.sparkContext.defaultParallelism
-    return max(1, min(n_splits, max(2 * par, -(-n_splits // 8))))
+    return max(1, min(n_splits, max(par, -(-n_splits // 8))))
+
+
+def _task_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """rows as a LocalTableScan (from a pyarrow Table: no Python task re-pickles
+    them, as createDataFrame(<list>)'s ExistingRDD scan would), repartitioned."""
+    names = [col.split()[0] for col in schema.split(", ")]
+    cols = [pa.array([r[i] for r in rows]) for i in range(len(names))]
+    tasks = spark.createDataFrame(pa.table(cols, names=names), schema)
+    return tasks.repartition(_task_partitions(spark, len(rows)))
 
 
 def _pin_arrow_single_thread() -> None:
@@ -254,24 +253,22 @@ def encode_job_direct(
     os.makedirs(enc_dir, exist_ok=True)
 
     splits = list_input_splits_distributed(spark, in_path)
-    if resume:
-        try:
-            done = {
-                r["input_split"]
-                for r in spark.read.parquet(lin_dir)
-                .filter(F.col("status") == "done")
-                .select("input_split")
-                .collect()
-            }
-            splits = [(f, rg) for f, rg in splits if _split_name(f, rg) not in done]
-        except Exception:
-            pass
+    if resume and os.path.isdir(lin_dir):
+        # an unreadable lineage must fail the job, not re-encode every
+        # split and append duplicate rows; the explicit schema reads a
+        # directory left empty by a failed first write as no rows
+        done = {
+            r["input_split"]
+            for r in spark.read.schema(SUMMARY_SCHEMA).parquet(lin_dir)
+            .filter(F.col("status") == "done")
+            .select("input_split")
+            .collect()
+        }
+        splits = [(f, rg) for f, rg in splits if _split_name(f, rg) not in done]
     if not splits:
         return spark.read.parquet(lin_dir)
 
-    tasks = spark.createDataFrame(splits, "path string, rg int").repartition(
-        _task_partitions(spark, len(splits))
-    )
+    tasks = _task_frame(spark, splits, "path string, rg int")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = SUMMARY_SCHEMA.replace(" string", "").replace(" long", "").split(", ")
@@ -298,9 +295,7 @@ def decode_verify_direct(spark: SparkSession, enc_dir: str) -> dict:
     decoded and the block-combinable hash compared (V1 analogue at full
     throughput). Returns totals."""
     splits = list_input_splits_distributed(spark, enc_dir)
-    tasks = spark.createDataFrame(splits, "path string, rg int").repartition(
-        _task_partitions(spark, len(splits))
-    )
+    tasks = _task_frame(spark, splits, "path string, rg int")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -346,7 +341,9 @@ def decode_verify_direct(spark: SparkSession, enc_dir: str) -> dict:
                             hs += hashing.block_hash(bid[j], chunk)
                             ntk += len(chunk)
                         if hs & ((1 << 63) - 1) != int(hashes[i]):
-                            raise ValueError(f"hash mismatch in {path} rg{rg} row {i}")
+                            raise ValueError(
+                                f"hash mismatch in {path} rg{rg} row {n_rows + i}"
+                            )
                         n_tokens += ntk
                     n_rows += len(hashes)
                 rows.append((n_rows, n_tokens))

@@ -2,6 +2,10 @@
 reference's STR-finder TEST_MAIN micro-harness style (str_finder.c:267-299).
 """
 
+import os
+import subprocess
+import sys
+
 import numpy as np
 import pytest
 
@@ -82,3 +86,37 @@ def test_fsst_adversarial_alternating():
     buf = fsst.encode(a)
     np.testing.assert_array_equal(fsst.decode(buf, len(a)), a)
     assert len(buf) < 300
+
+
+def test_length_guards_raise_under_python_O(tmp_path):
+    # the decode length check and the cost model's payload-size check are
+    # correctness guards: `python -O` strips asserts, so both must raise
+    probe = tmp_path / "probe.py"
+    probe.write_text(
+        """
+import numpy as np
+from crumble_spark import codecs, cost
+
+a = np.arange(64, dtype=np.int32)
+codecs._DECODERS[codecs.RAW] = lambda buf, n: np.zeros(n - 1, np.int32)
+try:
+    codecs.decode(codecs.RAW, codecs.encode(codecs.RAW, a), len(a))
+except ValueError as e:
+    print("decode", e)
+codecs._ENCODERS = {c: (lambda arr: b"x") for c in codecs._ENCODERS}
+try:
+    cost.choose(a)
+except RuntimeError as e:
+    print("choose", e)
+"""
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-O", str(probe)],
+        capture_output=True,
+        text=True,
+        check=True,
+        env={**os.environ, "PYTHONPATH": repo},
+    ).stdout
+    assert "decode codec 0: 63 int32, want 64 int32" in out, out
+    assert "choose codec" in out, out

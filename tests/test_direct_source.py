@@ -203,3 +203,73 @@ def test_listing_order_identical_for_nested_dirs(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(direct, "DISTRIBUTED_LISTING_MIN_FILES", 1)
     assert direct.list_input_splits_distributed(spark, str(root)) == serial
+
+
+def test_task_partitions_one_task_per_slot_capped_at_8_splits():
+    from types import SimpleNamespace
+
+    fake = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=4))
+    assert direct._task_partitions(fake, 2) == 2
+    assert direct._task_partitions(fake, 32) == 4
+    assert direct._task_partitions(fake, 8 * 4 + 1) == 5  # ceil(33 / 8)
+
+
+def test_task_frame_is_jvm_local_and_one_task_per_slot(spark):
+    # the task list must not be a Python-RDD scan: that stage launches
+    # Python tasks whose only work is re-pickling the driver's list
+    splits = [(f"/in/part-{i:03d}.parquet", i % 4) for i in range(32)]
+    tasks = direct._task_frame(spark, splits, "path string, rg int")
+    plan = tasks._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "LocalTableScan" in plan, plan
+    assert tasks.rdd.getNumPartitions() == direct._task_partitions(spark, len(splits))
+    assert sorted((r["path"], r["rg"]) for r in tasks.collect()) == splits
+
+
+def test_decode_verify_names_row_within_row_group(spark, tmp_path):
+    # rows are verified in 1024-row batches; the error must give the row's
+    # index in the row group, not in its batch
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = 1500
+    src = str(tmp_path / "in.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array([f"d{i}" for i in range(n)], pa.string()),
+                "tokens": pa.array(
+                    [[i, i + 1, 7] for i in range(n)], pa.list_(pa.int32())
+                ),
+                "n_tok": pa.array([3] * n, pa.int32()),
+                "source": pa.array(["web"] * n, pa.string()),
+            }
+        ),
+        src,
+    )
+    enc_dir = tmp_path / "enc"
+    enc_dir.mkdir()
+    out_file = direct._encode_split(src, 0, str(enc_dir), 256, 16)[7]
+    t = pq.read_table(out_file)
+    hashes = t.column("row_hash").to_pylist()
+    hashes[1300] ^= 1
+    col = t.schema.get_field_index("row_hash")
+    t = t.set_column(col, "row_hash", pa.array(hashes, pa.int64()))
+    pq.write_table(t, out_file)
+    assert pq.ParquetFile(out_file).num_row_groups == 1
+    with pytest.raises(Exception, match=r"rg0 row 1300\b"):
+        direct.decode_verify_direct(spark, str(enc_dir))
+
+
+def test_direct_resume_fails_on_unreadable_lineage(spark, tok_dir, tmp_path):
+    # a corrupt lineage file must fail the resume, not silently re-encode
+    # every split and append a second set of lineage rows
+    import glob
+
+    out = str(tmp_path / "corrupt_lineage")
+    direct.encode_job_direct(spark, tok_dir, out, block_size=256, n_splits=16)
+    parts = sorted(glob.glob(f"{out}/lineage_direct/*.parquet"))
+    with open(parts[0], "wb") as fh:
+        fh.write(b"not a parquet file")
+    with pytest.raises(Exception, match="lineage_direct/part-"):
+        direct.encode_job_direct(spark, tok_dir, out, block_size=256, n_splits=16)
+    assert sorted(glob.glob(f"{out}/lineage_direct/*.parquet")) == parts
