@@ -4,9 +4,9 @@ transcode loop (snp_score.c:1336-2029): all decisions are local to a
 bounded block, the transform is verified (row_hash), and a verbatim RAW
 fallback bounds the worst case.
 
-Catalyst note: the pipeline stays one narrow stage — scan → (optional
-salted repartition, partitioning.py) → mapInPandas → sink.  No shuffle is
-introduced by encoding itself.
+Catalyst note: the pipeline stays one narrow stage — scan → mapInPandas →
+sink.  No shuffle is introduced by encoding itself; only the giant-row
+path in partitioning.py shuffles, and then per-block rows.
 """
 
 from __future__ import annotations

@@ -1,10 +1,11 @@
 """spark-submit entry: read tokens table → encode → write encoded +
 lineage, resumable.  (crumble `main`/`transcode` analogue, minus the CLI
-option zoo — config is the EncodeConfig dataclass, presets TBD.)
+option zoo — config is the EncodeConfig dataclass; PRESETS holds the
+-1..-9 style bundles.)
 
 Usage:
-    spark-submit --py-files crumble_spark.zip -m crumble_spark.job \
-        --input <parquet-or-iceberg> --output <dir> [--resume]
+    spark-submit --py-files dist/crumble_spark.zip scripts/run_encode.py \
+        --input <parquet-or-iceberg> --output <dir> [--no-resume]
 
 Sink: Iceberg (`--format iceberg`) when the runtime has the Iceberg Spark
 connector on the classpath; parquet with dynamic partition overwrite
@@ -23,14 +24,14 @@ from pyspark.sql import functions as F
 
 from . import DEFAULT_BLOCK_SIZE, lineage
 from .encode import with_split_id
-from .partitioning import encode_df_skewaware
+from .partitioning import GIANT_ROW_TOKENS, encode_df_skewaware
 
 
 @dataclass
 class EncodeConfig:
     block_size: int = DEFAULT_BLOCK_SIZE
     n_splits: int = 256
-    giant_threshold: int = 262_144
+    giant_threshold: int = GIANT_ROW_TOKENS
 
 
 # preset bundles, the analogue of crumble's -1..-9 macro levels
@@ -79,7 +80,7 @@ def run_encode_job(
     def read_lineage():
         if sink == "iceberg":
             return read_table(lin_dir)
-        return spark.read.parquet(lin_dir)
+        return lineage.read_parquet_lineage(spark, lin_dir)
 
     df = with_split_id(df, cfg.n_splits)
     done = lineage.completed_splits(spark, lin_dir, reader=read_lineage) if resume else None

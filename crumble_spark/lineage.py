@@ -10,8 +10,12 @@ re-run of any split is byte-identical (idempotent).
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .schema import LINEAGE_SCHEMA
+from .sinks import _is_missing_table
 
 # checksum = sum(row_hash mod 2^31): order-insensitive, and bounded so the
 # per-split Spark sum cannot overflow int64 even at 10^12-row scale
@@ -52,13 +56,24 @@ def completed_splits(
     spark: SparkSession, lineage_dir: str, reader=None
 ) -> DataFrame | None:
     """Splits already finished by any prior run (encoding is deterministic,
-    so any done split is valid regardless of which run produced it).
+    so any done split is valid regardless of which run produced it), or
+    None while the lineage does not exist yet.  Any other read error
+    raises: treating an unreadable lineage as "nothing done" would
+    re-encode every split and append duplicate lineage rows.
     `reader` overrides how the lineage table is loaded (Iceberg sinks)."""
     try:
-        lin = reader() if reader is not None else spark.read.parquet(lineage_dir)
-    except Exception:
-        return None
+        lin = reader() if reader is not None else read_parquet_lineage(spark, lineage_dir)
+    except AnalysisException as e:
+        if "PATH_NOT_FOUND" in str(e) or _is_missing_table(e):
+            return None
+        raise
     return lin.filter(F.col("status") == "done").select("split_id").distinct()
+
+
+def read_parquet_lineage(spark: SparkSession, lineage_dir: str) -> DataFrame:
+    """The explicit schema reads a directory left empty by a failed first
+    append as no rows instead of failing schema inference."""
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_dir)
 
 
 def filter_resume(df: DataFrame, done: DataFrame | None) -> DataFrame:

@@ -3,22 +3,22 @@
 Crumble's skew is coverage depth, guarded by a decayed running average and
 a MAX_DEPTH bail (snp_score.c:1671-1687, 92, 1493-1500).  Ours is token
 count: a few documents carry orders of magnitude more tokens than the
-median (FIXTURES.md skew fixture).  Three layers of defense:
+median (FIXTURES.md skew fixture).  Two layers of defense:
 
-1. salted repartition — work is spread by hash(doc_id) salt, not by
-   source, so one hot source cannot pin a straggler task;
-2. giant-document block-parallel path — rows above a token threshold are
-   exploded into per-block rows, encoded wherever the shuffle puts them,
+1. giant-document block-parallel path — rows above a fixed token
+   threshold are exploded into per-block rows, hash-spread on
+   (doc_id, block_id) so one long document's blocks land on many tasks,
    and reassembled by a groupBy(doc_id); row_hash is block-combinable
    (hashing.py) precisely so this path needs no full-row pass anywhere;
-3. bounded Arrow slices inside the kernel (encode.bounded_slices) as the
+2. bounded Arrow slices inside the kernel (encode.bounded_slices) as the
    last-resort memory guard, plus AQE skew-join/partition coalescing as
    the runtime backstop.
 
-At 100 TB the same code holds: the threshold is per-task memory-derived,
-the explode is a narrow op, and the one shuffle (reassembly groupBy) moves
-only encoded bytes — i.e. post-compression, typically 5-20x smaller than
-the input.
+Ordinary rows are never shuffled: task granularity comes from input
+splits.  At 100 TB the same code holds: the explode is a narrow op, the
+block-spread shuffle moves only the giant rows, and the reassembly
+shuffle moves only encoded bytes — i.e. post-compression, typically
+5-20x smaller than the input.
 """
 
 from __future__ import annotations
@@ -36,33 +36,6 @@ from .encode import BLOCK_OVERHEAD, encode_df, with_split_id
 from .schema import BLOCK_SCHEMA, ENCODED_SCHEMA
 
 GIANT_ROW_TOKENS = 262_144  # rows longer than this take the block-parallel path
-GIANT_FLOOR_TOKENS = 32_768  # adaptive threshold never drops below this
-GIANT_TAIL_QUANTILE = 0.999
-GIANT_TAIL_FACTOR = 8
-
-
-def derive_giant_threshold(
-    df: DataFrame,
-    floor: int = GIANT_FLOOR_TOKENS,
-    cap: int = GIANT_ROW_TOKENS,
-    quantile: float = GIANT_TAIL_QUANTILE,
-    factor: int = GIANT_TAIL_FACTOR,
-) -> int:
-    """Data-derived giant-row threshold (crumble's decayed running depth
-    average made a pre-pass, snp_score.c:1671-1687): clamp(p99.9(n_tok) *
-    factor) between floor and cap.
-
-    A tight length distribution keeps the high static cap (nothing gains
-    from the block-parallel detour); a heavy-tailed source pulls the
-    threshold down so its tail rows are split across tasks instead of
-    pinning stragglers.  One percentile_approx aggregate — a single scan
-    with partial aggregation, 1-row result, negligible against the encode.
-    """
-    row = df.agg(
-        F.percentile_approx("n_tok", quantile).alias("p")
-    ).collect()[0]
-    p = int(row["p"] or 0)
-    return int(min(cap, max(floor, p * factor)))
 
 _CHUNK_SCHEMA = T.StructType(
     [
@@ -76,98 +49,6 @@ _CHUNK_SCHEMA = T.StructType(
         T.StructField("block_hash", T.LongType(), False),
     ]
 )
-
-
-def salted_repartition(df: DataFrame, n_parts: int, salt_buckets: int = 64) -> DataFrame:
-    """Hash-salted repartition on doc_id — uniform rows per task regardless
-    of source skew. Deterministic (xxhash64), so plans are reproducible."""
-    return df.repartition(
-        n_parts, F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets * n_parts))
-    )
-
-
-SALT_BASE = 8  # every source spreads over at least this many buckets
-SALT_CAP = 1024  # and at most this many (bounds the tiny-partition tail)
-
-
-def derive_salt_plan(
-    df: DataFrame, n_parts: int, base: int = SALT_BASE, cap: int = SALT_CAP
-) -> dict[str, int]:
-    """Per-source salt-bucket counts from one aggregate pre-pass (the
-    second half of the percentile discipline behind derive_giant_threshold):
-    a source's share of total TOKENS — the actual encode work — decides how
-    many salt buckets its rows spread over.  A uniform source stays at
-    `base`; one hot unsplittable source gets buckets proportional to the
-    tasks its work should fill (2x headroom), so it cannot pin stragglers.
-    One groupBy over (source) with partial aggregation; the result is a
-    handful of rows (sources are few by construction).
-
-    A genuine NULL source contributes its tokens to the total but gets no
-    plan entry — create_map literals cannot key on null, and
-    derive_skew_stats applies the same filter, keeping the documented
-    `plan == derive_salt_plan(df)` invariant on corpora with null sources
-    (ADVICE r4); null-source rows take the default salt width via the
-    coalesce in salted_repartition_by_source."""
-    rows = df.groupBy("source").agg(F.sum(F.col("n_tok").cast("long")).alias("tok")).collect()
-    total = sum(r["tok"] or 0 for r in rows) or 1
-    return {
-        r["source"]: int(min(cap, max(base, -(-((r["tok"] or 0) * 2 * n_parts) // total))))
-        for r in rows
-        if r["source"] is not None
-    }
-
-
-def derive_skew_stats(
-    df: DataFrame,
-    n_parts: int,
-    floor: int = GIANT_FLOOR_TOKENS,
-    cap: int = GIANT_ROW_TOKENS,
-    quantile: float = GIANT_TAIL_QUANTILE,
-    factor: int = GIANT_TAIL_FACTOR,
-    base: int = SALT_BASE,
-    salt_cap: int = SALT_CAP,
-) -> tuple[int, dict[str, int]]:
-    """(giant_threshold, salt_plan) from ONE rollup scan: the grand-total
-    row carries the global p-quantile (same percentile_approx the
-    standalone derive_giant_threshold computes), the per-source rows the
-    token shares — so enabling both adaptive features costs one pre-pass
-    over the input, not two."""
-    rows = (
-        df.rollup("source")
-        .agg(
-            F.sum(F.col("n_tok").cast("long")).alias("tok"),
-            F.percentile_approx("n_tok", quantile).alias("p"),
-            # grouping() distinguishes the rollup grand-total row from a
-            # genuine NULL-source group (ADVICE r3): selecting the total by
-            # `source IS NULL` would pick the null group's percentile as
-            # the global quantile and drop its tokens from the salt total
-            F.grouping("source").alias("is_total"),
-        )
-        .collect()
-    )
-    total = sum((r["tok"] or 0) for r in rows if r["is_total"] == 0) or 1
-    # a genuine NULL source contributes to the total but gets no plan
-    # entry (map literals can't key on null); its rows take the default
-    # salt width in salted_repartition_by_source via coalesce
-    plan = {
-        r["source"]: int(min(salt_cap, max(base, -(-((r["tok"] or 0) * 2 * n_parts) // total))))
-        for r in rows
-        if r["is_total"] == 0 and r["source"] is not None
-    }
-    p_global = next(int(r["p"] or 0) for r in rows if r["is_total"] == 1)
-    return int(min(cap, max(floor, p_global * factor))), plan
-
-
-def salted_repartition_by_source(
-    df: DataFrame, n_parts: int, plan: dict[str, int], default: int = SALT_BASE
-) -> DataFrame:
-    """Repartition on (source, per-source salt): each source's rows spread
-    over exactly its planned bucket count.  The plan lookup is a JVM-side
-    map literal — no UDF, deterministic, reproducible plans."""
-    mapping = F.create_map(*[F.lit(x) for kv in plan.items() for x in kv])
-    buckets = F.coalesce(mapping[F.col("source")], F.lit(default))
-    salt = F.pmod(F.xxhash64("doc_id"), buckets)
-    return df.repartition(n_parts, F.col("source"), salt)
 
 
 def _encode_chunks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -205,8 +86,11 @@ def encode_giant_rows(df: DataFrame, block_size: int = DEFAULT_BLOCK_SIZE) -> Da
     the chunks of one document land on many tasks; reassemble with one
     groupBy over already-encoded (small) payloads.
     """
-    # one exploded row per block: slice(tokens, ...) keeps this JVM-side
-    nb = F.ceil(F.col("n_tok") / F.lit(block_size)).cast("int")
+    # one exploded row per block: slice(tokens, ...) keeps this JVM-side.
+    # The block count comes from the array itself, not n_tok: a row whose
+    # n_tok understates its length would lose its tail blocks, and one
+    # that overstates it would emit empty blocks.
+    nb = F.ceil(F.size("tokens") / F.lit(block_size)).cast("int")
     exploded = (
         df.withColumn("block_id", F.explode(F.sequence(F.lit(0), nb - 1)))
         .withColumn(
@@ -245,40 +129,19 @@ def encode_df_skewaware(
     df: DataFrame,
     block_size: int = DEFAULT_BLOCK_SIZE,
     n_splits: int = 256,
-    giant_threshold: int | str = GIANT_ROW_TOKENS,
-    repartition: bool = False,
-    n_parts: int | None = None,
+    giant_threshold: int = GIANT_ROW_TOKENS,
 ) -> DataFrame:
     """Route giant rows to the block-parallel path, everything else to the
     fused single-pass path; union the (identical) encoded schemas.
 
     Parallelism strategy: encode is CPU-bound (~40 MB/s/core), so task
     granularity comes from *input splits* (session.py caps
-    files.maxPartitionBytes at 32 MB) — shuffling raw token arrays just to
-    rebalance costs more than it saves.  `repartition=True` adds the
-    salted shuffle for pathological layouts (one hot unsplittable file,
-    severely clustered doc sizes); the giant-row path and AQE cover the
-    rest.
-
-    giant_threshold="auto" derives the threshold from the input's own
-    length distribution (derive_giant_threshold); repartition=True salts
-    per source with data-derived bucket counts (derive_salt_plan), so one
-    hot source spreads over proportionally more tasks than a uniform one.
+    files.maxPartitionBytes at 8 MB) — shuffling raw token arrays just to
+    rebalance costs more than it saves.  Routing is on n_tok so both
+    predicates push down to the parquet scan.
     """
-    if repartition and n_parts is None:
-        n_parts = df.sparkSession.sparkContext.defaultParallelism * 4
-    salt_plan = None
-    if giant_threshold == "auto" and repartition:
-        # both adaptive features on → one combined rollup scan, not two
-        giant_threshold, salt_plan = derive_skew_stats(df, n_parts)
-    elif giant_threshold == "auto":
-        giant_threshold = derive_giant_threshold(df)
     df = with_split_id(df, n_splits)
     small = df.filter(F.col("n_tok") <= giant_threshold)
-    if repartition:
-        if salt_plan is None:
-            salt_plan = derive_salt_plan(df, n_parts)
-        small = salted_repartition_by_source(small, n_parts, salt_plan)
     big = df.filter(F.col("n_tok") > giant_threshold)
     enc_small = encode_df(small, block_size=block_size, n_splits=n_splits)
     enc_big = encode_giant_rows(big, block_size=block_size)

@@ -1,7 +1,7 @@
 """SparkSession factory with the configs this engine assumes.
 
 Arrow transfer is mandatory (all kernels are Arrow-batched pandas UDFs);
-AQE stays on as the runtime backstop for skew the explicit salting in
+AQE stays on as the runtime backstop for skew the giant-row path in
 partitioning.py didn't anticipate.
 """
 

@@ -1,6 +1,10 @@
 """Checkpoint/resume: kill-and-rerun yields identical output (FIXTURES.md
 assertion 4); lineage accounting is exact."""
 
+import glob
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from crumble_spark import lineage, synth
@@ -65,3 +69,33 @@ def test_lineage_accounting_exact(spark, tmp_path):
         F.explode("codec_hist").alias("codec", "cnt")
     ).agg(F.sum("cnt")).collect()[0][0]
     assert hist_total == total_blocks
+
+
+def test_resume_fails_on_unreadable_lineage(spark, tmp_path):
+    # only a lineage that does not exist yet means "nothing done"; read as
+    # such, a corrupt one would re-encode every split and append a
+    # duplicate lineage file, so the resume must fail before any write
+    out = str(tmp_path / "corrupt")
+    cfg = EncodeConfig(block_size=256, n_splits=8)
+    df = _table(spark)
+    run_encode_job(spark, df, out, run_id="r1", cfg=cfg, resume=True)  # no lineage yet
+    lin_files = sorted(glob.glob(f"{out}/lineage/*.parquet"))
+    with open(lin_files[0], "wb") as f:  # the file schema inference would read
+        f.write(b"not a parquet file")
+    snapshot = lambda: {
+        p: os.path.getmtime(p)
+        for p in glob.glob(f"{out}/**/*", recursive=True)
+        if os.path.isfile(p)
+    }
+    before = snapshot()
+
+    with pytest.raises(Exception):
+        run_encode_job(spark, df, out, run_id="r2", cfg=cfg, resume=True)
+    assert snapshot() == before
+
+
+def test_empty_lineage_dir_means_no_splits_done(spark, tmp_path):
+    # a failed first lineage append can leave the directory behind, empty
+    empty = tmp_path / "lineage"
+    empty.mkdir()
+    assert lineage.completed_splits(spark, str(empty)).count() == 0

@@ -31,18 +31,22 @@ def _hinted_subtrees(df) -> list:
     carry merge hints precisely to keep AQE from broadcasting a
     corpus-proportional set at small SF).
     """
-    out = []
-    stack = [df._jdf.queryExecution().analyzed()]
+    return [
+        node.toString()
+        for node in _nodes(df._jdf.queryExecution().analyzed())
+        if node.getClass().getSimpleName() == "ResolvedHint"
+        and "broadcast" in node.toString().splitlines()[0].lower()
+    ]
+
+
+def _nodes(root) -> list:
+    """Every node of a JVM plan tree, root first."""
+    out, stack = [], [root]
     while stack:
         node = stack.pop()
-        if (
-            node.getClass().getSimpleName() == "ResolvedHint"
-            and "broadcast" in node.toString().splitlines()[0].lower()
-        ):
-            out.append(node.toString())
+        out.append(node)
         children = node.children()
-        for i in range(children.size()):
-            stack.append(children.apply(i))
+        stack.extend(children.apply(i) for i in range(children.size()))
     return out
 
 
@@ -220,6 +224,36 @@ def test_encode_scan_prunes_and_pushes(spark):
     assert "ReadSchema" in plan
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
     assert "text" in read_schema and "ts" not in read_schema
+
+
+def test_skewaware_encode_plan_shape(spark, tmp_path):
+    # PLANS.md "Encode (skew-aware)": ordinary rows go scan → MapInPandas
+    # with no shuffle of raw tokens; the giant branch holds the only two
+    # Exchanges (block spread on (doc_id, block_id), then reassembly); the
+    # n_tok routing predicates reach the parquet scans
+    from crumble_spark.partitioning import encode_df_skewaware
+
+    path = str(tmp_path / "tokens")
+    spark.createDataFrame(
+        [(f"d{i}", [i] * i, i, "web") for i in range(1, 40)],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    ).write.parquet(path)
+    enc = encode_df_skewaware(spark.read.parquet(path), giant_threshold=20)
+
+    name = lambda n: n.getClass().getSimpleName()
+    plan = enc._jdf.queryExecution().executedPlan()
+    if name(plan) == "AdaptiveSparkPlanExec":
+        plan = plan.initialPlan()  # the plan with its Exchanges, before any stage runs
+    (union,) = [n for n in _nodes(plan) if name(n) == "UnionExec"]
+    small, giant = (_nodes(union.children().apply(i)) for i in range(2))
+    scan = lambda branch: next(n.toString() for n in branch if name(n) == "FileSourceScanExec")
+
+    assert name(small[0]) == "MapInPandasExec"
+    assert "ShuffleExchangeExec" not in [name(n) for n in small]
+    assert [name(n) for n in _nodes(plan)].count("ShuffleExchangeExec") == 2
+    assert [name(n) for n in giant].count("ShuffleExchangeExec") == 2
+    assert "LessThanOrEqual(n_tok,20)" in scan(small).split("PushedFilters:")[1]
+    assert "GreaterThan(n_tok,20)" in scan(giant).split("PushedFilters:")[1]
 
 
 def test_ann_scaled_recall_floor(spark):
